@@ -10,9 +10,9 @@ trait SparkFixture {
   val Sf: String = "/root/testdata/sf0.001"
 
   def tmp(sub: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft-test-$sub").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
+    val d = java.nio.file.Files.createTempDirectory(s"graft-test-$sub").toFile.getAbsolutePath
+    SparkFixture.tmpDirs.add(d)
+    d
   }
 
   /** Count Spark jobs started by `body` — the shared zero-job fence
@@ -64,6 +64,11 @@ trait SparkFixture {
 }
 
 object SparkFixture {
+  /** Every [[SparkFixture.tmp]] dir, wiped with its contents by one
+    * shutdown hook (`File.deleteOnExit` removes only empty dirs). */
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+  sys.addShutdownHook(tmpDirs.forEach(d => Graft.wipeDir(d)))
+
   lazy val session: SparkSession = {
     val s = Graft.configure(SparkSession.builder().master("local[4]")).getOrCreate()
     s.sparkContext.setLogLevel("WARN")

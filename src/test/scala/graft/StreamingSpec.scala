@@ -507,11 +507,11 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       val q = spark.readStream.format("graft-changes")
         .option(opt, value)
         .load(table)
-        .writeStream.format("parquet").option("path", s"$out-$ckptSuffix")
+        .writeStream.format("parquet").option("path", s"$out/$ckptSuffix")
         .option("checkpointLocation", tmp(s"cdfsrc7-ckpt-$ckptSuffix"))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       q.awaitTermination()
-      assert(spark.read.parquet(s"$out-$ckptSuffix").select("id").collect()
+      assert(spark.read.parquet(s"$out/$ckptSuffix").select("id").collect()
         .map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L),
         s"$opt must deliver every change across the gap")
     }
