@@ -1,6 +1,7 @@
 package graft.engine
 
-import org.apache.spark.sql.Column
+import graft.functions.CarrySum
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -49,7 +50,7 @@ object Exact {
 
   /** Exact fixed-point LONG sum of a double column — bit-identical to
     * [[decSum]] on inputs that are exact at ≤ `decimals` fractional
-    * digits, at ~5× less per-row cost (r17 AggCostProbe: three decimal
+    * digits, at ~5× less per-row cost (r17 measurement: three decimal
     * sums over one 600k-row scan task cost 1.48 s vs 0.66 s fixed-point
     * vs 0.34 s raw double — Spark's Decimal update path allocates a
     * rounded BigDecimal per row, the long path is pure codegen FP).
@@ -72,21 +73,30 @@ object Exact {
     *      and T·10^d is an integer, so the +0.5/floor recovers exactly
     *      T·10^d. Both paths therefore agree per row: the decimal cast
     *      holds T, the long holds T·10^d.
-    *   3. `sum(long)` of exact integers is exact (ANSI mode throws on
-    *      the impossible overflow rather than wrapping); rescaling the
+    *   3. A sum of exact integers is exact (the LONG `sum` throws on
+    *      overflow under ANSI rather than wrapping; the carry sum cannot
+    *      overflow short of the DECIMAL output); rescaling the
     *      total through DECIMAL (`×10⁻ᵈ`, exact multiply, then the
     *      scale-6 widening cast) reproduces the identical DECIMAL(25,6)
     *      value decSum's final cast sees, so the edge DOUBLE is
     *      bit-identical.
     *
-    * Bounds (documented per call site): per-GROUP Σ|x|·10^d < 2⁶³ —
-    * at d=2 that is ~9×10¹⁶ of summed value per group (≥ sf 10⁵ of
-    * TPC-H money, comfortably past 100 TB); at d=4 ~9×10¹⁴ per group
-    * (~sf 3×10⁴ for the Q1 revenue product — beyond that, sub-aggregate
-    * first or revert to [[decSum]]). Exactness precondition: inputs
-    * exact at ≤ `decimals` digits and |x|·10^d ≲ 10¹² (step 2); both
-    * hold for every fixture money column (FixSumSpec pins equality
-    * against decSum on fixtures AND randomized money domains).
+    * Overflow policy — the two rules, one per form:
+    *   - [[fixSum]] sums one LONG per group, so it keeps a per-GROUP
+    *     bound Σ|x|·10^d < 2⁶³ (~9×10¹⁶ of summed value at d=2, ~9×10¹⁴
+    *     at d=4). Use it where the group key GROWS with the data (per
+    *     symbol-day, per order, the streaming aggregates), so per-group
+    *     volume stays flat as the corpus grows; ANSI mode turns a breach
+    *     into a thrown query, never a wrapped value.
+    *   - [[fixSumWide]] sums into a two-LONG carry buffer
+    *     ([[graft.functions.CarrySum]]) with no LONG bound at all; its
+    *     range is the DECIMAL(25,6) output's — [[decSum]]'s own bound.
+    *     Use it where the group count is fixed and small (q1, j4, s16),
+    *     so each group's sum grows with the table.
+    * Exactness precondition for both: inputs exact at ≤ `decimals`
+    * digits and |x|·10^d ≲ 10¹² (step 2); it holds for every fixture
+    * money column (FixSumSpec pins equality against decSum on fixtures
+    * AND randomized money domains).
     * NEVER use on arbitrary-precision doubles — a >6-decimal input
     * rounds by its binary value here but by its shortest repr in the
     * decimal cast, and the two can disagree (e.g. 1.0000025). */
@@ -96,56 +106,27 @@ object Exact {
   /** [[fixSum]] kept as DECIMAL(25,6) — drop-in for [[decSumRaw]]
     * (same type, same value) where downstream exact-decimal math
     * continues (e.g. Revenue's rate products). */
-  def fixSumRaw(c: Column, decimals: Int): Column = {
+  def fixSumRaw(c: Column, decimals: Int): Column =
+    fixed(c, decimals)(sum)
+
+  /** [[fixSum]] for few-group sums: the scaled LONGs are summed by the
+    * carry aggregate, so no per-group LONG bound applies (see the
+    * overflow policy above). Same value and type as [[fixSum]] wherever
+    * that one does not overflow. It costs a second buffer LONG per
+    * group, which is why [[fixSum]] stays where the group key grows. */
+  def fixSumWide(c: Column, decimals: Int): Column =
+    fixed(c, decimals)(x => GraftSqlBridge.column(
+      CarrySum(GraftSqlBridge.expression(x)).toAggregateExpression())).cast("double")
+
+  /** The one scale → aggregate → unscale chain of the fixed-point sums:
+    * `agg` sums the scaled LONGs; its integer total is rescaled through
+    * DECIMAL (`×10⁻ᵈ`, exact multiply, then the scale-6 widening cast). */
+  private def fixed(c: Column, decimals: Int)(agg: Column => Column): Column = {
     require(decimals >= 0 && decimals <= 6, s"decimals=$decimals")
     val pow = math.pow(10.0, decimals) // exact: 1, 100, 10000, 1000000
     val scaled = floor(c * lit(pow) + lit(0.5)) // LongType; null-safe
     val unscale = new java.math.BigDecimal(java.math.BigInteger.ONE, decimals)
-    (sum(scaled).cast(DecimalType(25, 0)) * lit(unscale)).cast(DecimalType(25, 6))
-  }
-
-  /** Salt-bucket count for the two-level fixed-point sum ([[fixSumPart]]
-    * / [[fixSumCombine]]). 64 buckets push the d=4 per-(group,salt)
-    * overflow bound from ~sf 2×10⁴ to ~sf 10⁶ for the worst site (q1's
-    * ~6-group revenue sum) while keeping the intermediate grain
-    * (groups × 64) far too small to matter in any exchange. */
-  val FixSumSalts = 64
-
-  /** Deterministic salt column for two-level aggregation (guide §2.5:
-    * NEVER derive a repartition/grouping salt from rand() — retried map
-    * tasks redraw and rows double-count; a hash of a stable key
-    * reproduces identically under retry). */
-  def saltCol(key: Column, n: Int = FixSumSalts): Column =
-    pmod(xxhash64(key), lit(n.toLong))
-
-  /** Per-salt partial of [[fixSum]]: the exact scaled-LONG sum over one
-    * (group, salt) bucket. Combine per group with [[fixSumCombine]].
-    *
-    * Why two levels (r18, VERDICT #2 / ADVICE high): a single-level
-    * fixSum needs per-GROUP Σ|x|·10^d < 2⁶³, and at d=4 a
-    * low-cardinality grouping (q1's ~6 groups: the group sum IS the
-    * table sum) breaches that at ~sf 3×10⁴ — below the 100 TB design
-    * point (≈ sf 10⁵); ANSI mode turns the breach into a thrown query.
-    * Splitting each group into [[FixSumSalts]] deterministic salt
-    * buckets divides the per-LONG bound by the bucket count: each
-    * partial is an exact integer < 2⁶³ (bound now ~sf 10⁶ at d=4), and
-    * the per-group combine sums ≤ [[FixSumSalts]] exact longs in
-    * DECIMAL(25,0) — headroom 10²⁵, exact by construction. Value-
-    * identical to [[fixSum]] and therefore to [[decSum]] (integer
-    * addition reassociates freely; FixSumSpec pins all three equal). */
-  def fixSumPart(c: Column, decimals: Int): Column = {
-    require(decimals >= 0 && decimals <= 6, s"decimals=$decimals")
-    val pow = math.pow(10.0, decimals) // exact: 1, 100, 10000, 1000000
-    sum(floor(c * lit(pow) + lit(0.5)))
-  }
-
-  /** Combine [[fixSumPart]] partials per group, surfaced as DOUBLE —
-    * same edge value as [[fixSum]]/[[decSum]] of the unsplit group. */
-  def fixSumCombine(partial: Column, decimals: Int): Column = {
-    require(decimals >= 0 && decimals <= 6, s"decimals=$decimals")
-    val unscale = new java.math.BigDecimal(java.math.BigInteger.ONE, decimals)
-    (sum(partial.cast(DecimalType(25, 0))).cast(DecimalType(25, 0)) * lit(unscale))
-      .cast(DecimalType(25, 6)).cast("double")
+    (agg(scaled).cast(DecimalType(25, 0)) * lit(unscale)).cast(DecimalType(25, 6))
   }
 
   /** [[decSum]] as a SQL fragment — the ONE definition of the

@@ -51,9 +51,7 @@ object Graft {
     // tx15 0.39→0.26, pr2 flat) and the sf1 sweep shows no spill cliff
     // (pr2 4.3× for 10× data). On a real cluster this number scales
     // with executor count and the fan-out cost amortizes into real IO.
-    // (SPARK_GRAFT_INIT_PARTS overrides for A/B runs.)
-    .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-      sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", (2 * cpus).toString))
+    .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", (2 * cpus).toString)
     // InferFiltersFromGenerate bolts `size(e)>0 AND isnotnull(e)` under
     // every explode; predicate pushdown then re-substitutes the FULL
     // generator expression into that filter at the scan (tx5's plan
@@ -76,7 +74,7 @@ object Graft {
     // partitioning still satisfies co-partitioned self-joins (both
     // sides read the same cache), so pr2's zero-exchange wedge join
     // keeps its shape — verified in the r18 plan receipts.
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
+    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     // Bloom-filter sizing ceilings (r18): DataFrameStatFunctions
     // .bloomFilter routes through BloomFilterAggregate, which silently
     // clamps BOTH its item estimate and its bit count to the runtime-

@@ -18,32 +18,19 @@ import org.apache.spark.sql.functions._
   */
 object Aggregates {
 
-  /** A1 at TPC-H-Q1 shape: the canonical hash aggregate.
-    *
-    * Two-level sum (r18, VERDICT #2): ~6 groups means each group's sum
-    * is ~1/6 of the table sum, so a single-level d=4 LONG partial
-    * (`sum_disc_price`) breached 2⁶³ at ~sf 2×10⁴ — below the 100 TB
-    * design point. The inner aggregate sums per (group, orderkey-salt)
-    * bucket (bound now ~sf 10⁶, see [[Exact.fixSumPart]]); the outer
-    * combine adds ≤64 exact longs per group in DECIMAL. Value-identical
-    * (integer reassociation) — oracle SQL unchanged, still hash-green. */
+  /** A1 at TPC-H-Q1 shape: the canonical hash aggregate. ~6 groups, so
+    * each group's sum grows with the table: the sums use the carry form
+    * ([[Exact.fixSumWide]]), one aggregation level, no LONG bound. */
   def q1Agg(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir).lineitem
-      .groupBy(col("l_returnflag"), col("l_linestatus"),
-        Exact.saltCol(col("l_orderkey")).as("_salt"))
-      .agg(
-        Exact.fixSumPart(col("l_quantity"), 2).as("p_qty"),
-        Exact.fixSumPart(col("l_extendedprice"), 2).as("p_price"),
-        Exact.fixSumPart(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4).as("p_dp"),
-        count(lit(1)).as("p_n"))
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
-        Exact.fixSumCombine(col("p_qty"), 2).as("sum_qty"),
-        Exact.fixSumCombine(col("p_price"), 2).as("sum_base_price"),
-        Exact.fixSumCombine(col("p_dp"), 4).as("sum_disc_price"),
-        (Exact.fixSumCombine(col("p_qty"), 2) / sum("p_n")).as("avg_qty"),
-        (Exact.fixSumCombine(col("p_price"), 2) / sum("p_n")).as("avg_price"),
-        sum("p_n").as("count_order"))
+        Exact.fixSumWide(col("l_quantity"), 2).as("sum_qty"),
+        Exact.fixSumWide(col("l_extendedprice"), 2).as("sum_base_price"),
+        Exact.fixSumWide(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4).as("sum_disc_price"),
+        (Exact.fixSumWide(col("l_quantity"), 2) / count(lit(1))).as("avg_qty"),
+        (Exact.fixSumWide(col("l_extendedprice"), 2) / count(lit(1))).as("avg_price"),
+        count(lit(1)).as("count_order"))
       .orderBy("l_returnflag", "l_linestatus")
 
   val q1AggOracle: String =

@@ -48,17 +48,10 @@ object Bucketed {
     * computes the same from the raw tables. */
   def bucketedJoinAgg(spark: SparkSession, dir: String): DataFrame =
     bucketedJoin(spark, dir)
-      // two-level d=4 sum (r18, VERDICT #2): 5 priority groups breached
-      // the single-level LONG bound at ~sf 2×10⁴; the orderkey salt buys
-      // 64× headroom. Value-identical (Exact.fixSumPart); oracle as-is.
-      // The salt is a pure map-side refinement of the bucket layout —
-      // the join itself stays shuffle-free.
-      .groupBy(col("o_orderpriority"), Exact.saltCol(col("l_orderkey")).as("_salt"))
-      .agg(count(lit(1)).as("p_n"),
-        Exact.fixSumPart(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4).as("p_rev"))
+      // 5 priority groups: few-group sum, carry form
       .groupBy("o_orderpriority")
-      .agg(sum("p_n").as("n_lines"),
-        Exact.fixSumCombine(col("p_rev"), 4).as("revenue"))
+      .agg(count(lit(1)).as("n_lines"),
+        Exact.fixSumWide(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4).as("revenue"))
       .orderBy("o_orderpriority")
 
   val bucketedJoinAggOracle: String =

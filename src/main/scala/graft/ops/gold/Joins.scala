@@ -460,19 +460,11 @@ object Joins {
     t.lineitem
       .join(t.orders, col("l_orderkey") === col("o_orderkey"))
       .join(t.customer, col("o_custkey") === col("c_custkey"))
-      // two-level d=4 sum (r18, VERDICT #2): 35 (segment, year) groups
-      // put the single-level LONG bound at ~sf 1.6×10⁵ — too tight for
-      // the 100 TB design point; the orderkey salt buys 64× headroom.
-      // Value-identical (see Exact.fixSumPart); oracle unchanged.
-      .groupBy(col("c_mktsegment"), year(col("o_orderdate")).cast("bigint").as("order_year"),
-        Exact.saltCol(col("l_orderkey")).as("_salt"))
+      // 35 (segment, year) groups: few-group sum, carry form
+      .groupBy(col("c_mktsegment"), year(col("o_orderdate")).cast("bigint").as("order_year"))
       .agg(
-        Exact.fixSumPart(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4).as("p_rev"),
-        count(lit(1)).as("p_n"))
-      .groupBy("c_mktsegment", "order_year")
-      .agg(
-        Exact.fixSumCombine(col("p_rev"), 4).as("revenue"),
-        sum("p_n").as("n_lines"))
+        Exact.fixSumWide(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4).as("revenue"),
+        count(lit(1)).as("n_lines"))
       .orderBy("c_mktsegment", "order_year")
   }
 

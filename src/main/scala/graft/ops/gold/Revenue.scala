@@ -71,7 +71,8 @@ object Revenue {
       // symbol) GROWS with the corpus — per-group volume is one
       // symbol-day of trades, so Σ|notional|·10⁴ per group stays
       // ~2×10¹²·sf/(days·symbols) ≪ 2⁶³ at sf 10⁵ (≈4×10⁶ bound).
-      // No two-level split needed here, unlike the ~6-group q1 shape.
+      // So the one-LONG fixSum applies (Exact's overflow policy); the
+      // carry form (fixSumWide) is for fixed, few-group keys.
       .groupBy("event_date", "symbol")
       .agg(Exact.fixSumRaw(col("notional"), 4).as("tn_dec"))
     val rules = rulesDf(spark)

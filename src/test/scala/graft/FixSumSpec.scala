@@ -7,12 +7,13 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** r17 optimization: [[Exact.fixSum]] replaced [[Exact.decSum]] on the
-  * gold/event-time money aggregates (AggCostProbe: three decimal sums
-  * cost 1.44 s vs 0.26 s fixed-point over one 600k-row scan task at
-  * sf0.1). The swap is sound ONLY if the two paths are bit-identical on
-  * the input domains involved — these tests pin that equality on every
-  * fixture money column, every touched query shape, and a randomized
-  * money domain (including nulls, negatives, group-level all-null).
+  * gold/event-time money aggregates (three decimal sums cost 1.44 s vs
+  * 0.26 s fixed-point over one 600k-row scan task at sf0.1). The swap is
+  * sound ONLY if the two paths are bit-identical on the input domains
+  * involved — these tests pin that equality on every fixture money
+  * column, every touched query shape, and a randomized money domain
+  * (including nulls, negatives, group-level all-null), and pin the
+  * carry form [[Exact.fixSumWide]] equal to both.
   */
 class FixSumSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
@@ -79,45 +80,69 @@ class FixSumSpec extends AnyFunSuite with SparkFixture {
     assertEqual(df4, Exact.decSum(col("v")), Exact.fixSum(col("v"), 4), Seq("k"))
   }
 
-  /** r18 (VERDICT #2): the two-level salted form replaced single-level
-    * fixSum at the low-cardinality d=4 sites (q1/j4/s16) whose per-group
-    * LONG bound fell below the 100 TB design point. Equality holds by
-    * integer reassociation; pinned here on fixtures and the randomized
-    * domain, against BOTH decSum and single-level fixSum. */
-  private def twoLevel(df: org.apache.spark.sql.DataFrame, v: org.apache.spark.sql.Column,
-                       d: Int, keys: Seq[String]): org.apache.spark.sql.DataFrame =
-    df.groupBy((keys.map(col) :+ Exact.saltCol(col("salt_key")).as("_salt")): _*)
-      .agg(Exact.fixSumPart(v, d).as("p"))
-      .groupBy(keys.map(col): _*)
-      .agg(Exact.fixSumCombine(col("p"), d).as("s"))
+  /** `fixSumWide` (the carry aggregate at the few-group sites q1/j4/s16)
+    * against BOTH decSum and single-level fixSum, per group. */
+  private def assertWide(df: org.apache.spark.sql.DataFrame, v: org.apache.spark.sql.Column,
+                         d: Int, keys: Seq[String]): Unit = {
+    val out = df.groupBy(keys.map(col): _*)
+      .agg(Exact.fixSumWide(v, d).as("wide"), Exact.decSum(v).as("dec"),
+        Exact.fixSum(v, d).as("one"))
+    assert(out.schema("wide").dataType === out.schema("dec").dataType)
+    val rows = out.collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      assert(r.getAs[Any]("wide") == r.getAs[Any]("dec"), r)
+      assert(r.getAs[Any]("wide") == r.getAs[Any]("one"), r)
+    }
+  }
 
-  test("two-level fixSumPart/Combine == decSum == fixSum (fixtures + random)") {
-    val li = t.lineitem.withColumn("salt_key", col("l_orderkey"))
-    val keys = Seq("l_returnflag", "l_linestatus")
-    val dp = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-    val two = twoLevel(li, dp, 4, keys)
-    val one = li.groupBy(keys.map(col): _*)
-      .agg(Exact.fixSum(dp, 4).as("s"))
-    val dec = li.groupBy(keys.map(col): _*)
-      .agg(Exact.decSum(dp).as("s"))
-    def m(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.get(0), r.get(1)) -> r.get(2)).toMap
-    assert(m(two) === m(dec))
-    assert(m(two) === m(one))
-
-    // randomized 4-decimal domain incl. nulls and an all-null group
+  /** Seeded 4-decimal domain: ~5% nulls, negatives, a rare group
+    * (9999, ~1% of rows) and an all-null group (12345). */
+  private def money4Rows: Seq[(Int, Option[Double])] = {
     val money4 = Gen.chooseNum(-1000000000L, 1000000000L).map(c => c / 10000.0)
-    val rows = (0 until 5000).map { i =>
+    (0 until 5000).map { i =>
       val v = if (i % 20 == 19) None
-              else Some(money4.apply(Gen.Parameters.default, Seed(i.toLong)).get)
-      (if (i % 100 == 0) 9999 else i % 7, i.toLong, v)
-    } ++ Seq((12345, -1L, None), (12345, -2L, None))
-    val df = rows.toDF("k", "salt_key", "v")
-    val t2 = twoLevel(df, col("v"), 4, Seq("k")).collect()
-      .map(r => r.get(0) -> r.get(1)).toMap
-    val t1 = df.groupBy("k").agg(Exact.decSum(col("v")).as("s")).collect()
-      .map(r => r.get(0) -> r.get(1)).toMap
-    assert(t2 === t1)
+              else money4.apply(Gen.Parameters.default, Seed(i.toLong))
+      (if (i % 100 == 0) 9999 else i % 7, v)
+    } ++ Seq((12345, None), (12345, None))
+  }
+
+  test("fixSumWide == decSum == fixSum on the fixture money columns") {
+    val li = t.lineitem
+    val keys = Seq("l_returnflag", "l_linestatus")
+    assertWide(li, col("l_quantity"), 2, keys)
+    assertWide(li, col("l_extendedprice"), 2, keys)
+    assertWide(li, col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4, keys)
+    assertWide(t.orders, col("o_totalprice"), 2, Seq("o_orderstatus"))
+  }
+
+  test("fixSumWide == decSum == fixSum on the seeded d=4 domain (nulls, negatives, all-null group)") {
+    val df = money4Rows.toDF("k", "v")
+    assertWide(df, col("v"), 4, Seq("k"))
+    val allNull = df.filter(col("k") === 12345)
+      .agg(Exact.fixSumWide(col("v"), 4).as("s")).collect().head
+    assert(allNull.isNullAt(0))
+  }
+
+  test("fixSumWide == decSum == fixSum with one group split across >= 3 partitions") {
+    val df = money4Rows.toDF("k", "v").repartition(4)
+    assert(df.filter(col("k") === 0).select(spark_partition_id()).distinct().count() >= 3)
+    assertWide(df, col("v"), 4, Seq("k"))
+  }
+
+  test("fixSumWide carries past 2^63 where fixSum overflows") {
+    // 4,000 rows alternating 9.0e13 / -3.0e13 over 3 keys at d=4: each
+    // key's scaled total (~1.6e20) passes 2^63 (~9.2e18), while the
+    // DECIMAL(25,6) output still holds it.
+    val df = (0 until 4000).map(i => (i % 3, if (i % 2 == 0) 9.0e13 else -3.0e13))
+      .toDF("k", "v").repartition(3)
+    val wide = df.groupBy("k").agg(Exact.fixSumWide(col("v"), 4).as("s"))
+    val dec = df.groupBy("k").agg(Exact.decSum(col("v")).as("s"))
+    def m(x: org.apache.spark.sql.DataFrame) = x.collect().map(r => r.get(0) -> r.get(1)).toMap
+    assert(m(wide) === m(dec))
+    val e = intercept[Exception](df.groupBy("k").agg(Exact.fixSum(col("v"), 4)).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("ARITHMETIC_OVERFLOW")), e)
   }
 
   test("fixSum diverges on >scale-decimal inputs (the documented ban)") {

@@ -2,9 +2,13 @@ package graft
 
 import graft.engine.Tables
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.{NamedExpression, ScalaUDF}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.scalatest.funsuite.AnyFunSuite
 
-class PlanRulesSpec extends AnyFunSuite with SparkFixture {
+class PlanRulesSpec extends AnyFunSuite with SparkFixture with AdaptiveSparkPlanHelper {
 
   test("to_date equality on normalized events ts pushes a range to parquet") {
     val df = Tables(spark, Sf).events
@@ -143,5 +147,25 @@ class PlanRulesSpec extends AnyFunSuite with SparkFixture {
     // per-group survivor bound: exactly ≤10 bigrams per language
     val perLang = df.groupBy("lang").count().collect()
     assert(perLang.nonEmpty && perLang.forall(_.getLong(1) <= 10))
+  }
+
+  test("few-group money sums plan one aggregation level in codegen, no salt, no UDF") {
+    for (name <- Seq("q1_agg", "j4_multi_join_agg", "s16_bucketed_join")) {
+      val df = SparkEntry.queries(name)(spark, Sf)
+      // analyzed, not optimized: the optimizer prunes the salt's name
+      // (PullOutGroupingExpressions renames it) while keeping its level
+      val analyzed = df.queryExecution.analyzed
+      val names = analyzed.flatMap(_.expressions.flatMap(_.collect { case n: NamedExpression => n.name }))
+      assert(!names.exists(_.startsWith("_salt")), s"$name:\n$analyzed")
+      val opt = df.queryExecution.optimizedPlan
+      assert(!opt.exists(_.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF]))), s"$name:\n$opt")
+      df.collect() // the final adaptive plan holds the codegen stages
+      val plan = df.queryExecution.executedPlan
+      val aggs = collect(plan) { case h: HashAggregateExec => h }
+      assert(aggs.size == 2, s"$name: want partial + final only:\n$plan")
+      val inCodegen = collect(plan) { case w: WholeStageCodegenExec =>
+        w.collect { case h: HashAggregateExec => h } }.flatten
+      assert(inCodegen.size == 2, s"$name: aggregates outside codegen:\n$plan")
+    }
   }
 }
