@@ -185,6 +185,23 @@ object Bench {
     dt
   }
 
+  /** Wall seconds of one run of `name`: a streaming drain through
+    * [[runStream]], else the query's full physical plan via
+    * `toRdd.count()`. The one timing path — [[main]] and
+    * [[graft.tools.Probe]] both time through it. Throws on failure. */
+  def time(spark: SparkSession, sfDir: String, name: String): Double =
+    if (streaming.contains(name)) runStream(name, spark, sfDir)
+    else {
+      val t0 = System.nanoTime()
+      SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
+      (System.nanoTime() - t0) / 1e9
+    }
+
+  /** Upper median — the ledger's per-query figure. */
+  def median(ts: Seq[Double]): Double = {
+    val s = ts.sorted; s(s.length / 2)
+  }
+
   def main(args: Array[String]): Unit = {
     // driver runs argless (full headline + streaming); args select a
     // subset for targeted timing during development
@@ -199,14 +216,8 @@ object Bench {
     // (nonsense) duration to anything summing or diffing the map, and a
     // silent partial-elapsed contribution would corrupt the ledger
     def run(name: String): Double =
-      try {
-        if (streaming.contains(name)) runStream(name, spark, sfDir)
-        else {
-          val t0 = System.nanoTime()
-          SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-          (System.nanoTime() - t0) / 1e9
-        }
-      } catch { case e: Throwable =>
+      try time(spark, sfDir, name)
+      catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: $e"); -1.0
       }
 
@@ -243,9 +254,6 @@ object Bench {
       }
     }
     val (ok, bad) = results.partition(_._2.forall(_ >= 0))
-    def median(ts: Seq[Double]): Double = {
-      val s = ts.sorted; s(s.length / 2)
-    }
 
     // ---- ambient self-defense (r12): any query whose IN-SUITE median
     // exceeds its recorded band re-runs ISOLATED after the suite (fresh

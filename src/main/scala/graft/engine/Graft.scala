@@ -208,7 +208,7 @@ object Graft {
     * under AQE and threw on streaming frames; the count now comes from
     * the planned scan leaves via [[org.apache.spark.sql.GraftSqlBridge.narrowScanPartitions]]). */
   private def fanWidth(df: DataFrame): Option[Int] = {
-    if (!fanScanEnabled || df.isStreaming) return None
+    if (df.isStreaming) return None
     val par = df.sparkSession.sparkContext.defaultParallelism
     org.apache.spark.sql.GraftSqlBridge.narrowScanPartitions(df)
       .filter(_ < par).map(_ => par)
@@ -235,10 +235,6 @@ object Graft {
       case None => build(df)
     }
   }
-
-  /** A/B switch for [[fanScan]] — FanProbe flips it per interleaved arm
-    * so both plans are timed in one JVM. Always true in production. */
-  private[graft] var fanScanEnabled = true
 }
 
 /** Canonical reads of the driver fixture tables (TESTDATA.md). One place

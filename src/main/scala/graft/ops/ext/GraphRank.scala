@@ -179,8 +179,8 @@ object GraphRank {
     // Bloom-prefilter the wedge stream BEFORE its exchange (r18, guide
     // §3.2): the wedge stream is the kernel's largest intermediate
     // (O(Σ out-deg²): 41M rows at sf0.1, 410M at sf1 — vs 1.2M edges)
-    // and almost none of it closes (4.6% at sf0.1, measured by
-    // [[graft.tools.Pr2BloomProbe]]). A Bloom filter over the oriented
+    // and almost none of it closes (4.6% at sf0.1; BENCH_NOTES "r18
+    // session 2", Pr2BloomProbe). A Bloom filter over the oriented
     // edge keys, built in one cheap pass over the already-cached edge
     // frame, drops the non-closing majority AT GENERATION TIME — inside
     // the wedge join's codegen stage, before the shuffle_hash exchange
@@ -234,17 +234,17 @@ object GraphRank {
     * and pair generation is in-row arithmetic bounded by the
     * ≤7-lines-per-order cap (k² ≤ 49 per row). Measured ~2× on the
     * warm edge build at sf0.1 (1.3 s vs 2.7 s — the controlled
-    * same-JVM pair; cold numbers carry first-touch parquet/JIT bias,
-    * see Pr2Probe); at cluster scale the win is the removed join
-    * shuffle of the full (ok, p) stream.
+    * same-JVM pair of the retired Pr2Probe, BENCH_NOTES "Retired
+    * probes"; cold numbers carry first-touch parquet/JIT bias); at
+    * cluster scale the win is the removed join shuffle of the full
+    * (ok, p) stream.
     *
     * NULL orderkeys are dropped explicitly: the old self-join (and the
     * DuckDB oracle's `a.ok = b.ok`) null-rejects, while groupBy would
     * pool all NULL-key rows into ONE group and mint phantom edges
     * among their parts — latent on TPC-H fixtures, divergent on any
-    * source with NULL keys (r17 review find). Shared by the query and
-    * [[graft.tools.Pr2Probe]] so the A/B can never desynchronize. */
-  private[graft] def coPurchaseEdges(t: Tables): DataFrame =
+    * source with NULL keys (r17 review find). */
+  private def coPurchaseEdges(t: Tables): DataFrame =
     t.lineitem
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
       .filter(col("ok").isNotNull && col("p").isNotNull)

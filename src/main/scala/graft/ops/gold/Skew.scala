@@ -61,7 +61,7 @@ object Skew {
     * [[Analyze.analyzedVersion]]); stats more than `maxStaleVersions`
     * behind the live snapshot are ignored.
     *
-    * WHEN AQE ALONE SUFFICES ([[graft.tools.SkewProbe]], r15): on a
+    * WHEN AQE ALONE SUFFICES (BENCH_NOTES "SkewProbe", r15): on a
     * single node the skew-join split and the pre-salt are close to a
     * wash — at sf1 with ONE key carrying 90% of 1M rows the pre-salt
     * wins (1.02 s vs AQE-split 1.36 s vs un-rescued 1.12 s), while

@@ -50,7 +50,7 @@ object DynamicFilter {
     * decision. 256 places the flip just above the measured crossover;
     * callers proving the prune on small fixtures pass `minFiles = 0`.
     *
-    * CONFIRMED at sf1 (r15, [[graft.tools.GateProbe]] — a 6M-row
+    * CONFIRMED at sf1 (r15, BENCH_NOTES "GateProbe" — a 6M-row
     * lineitem corpus cut into 4k-row files, 1%-selective clustered
     * dim): plain wins at 32 files (0.77 vs 1.01 s) and 128 files
     * (0.35 vs 1.00 s), the prune wins at 512 files (0.51 vs 0.79 s) —

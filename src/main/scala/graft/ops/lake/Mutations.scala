@@ -231,7 +231,7 @@ object Mutations {
         survivors.unionByName(srcWithIds, allowMissingColumns = true)
       }
     try Snapshots.commitRewrite(table, v0,
-      Snapshots.withInternalRid(restageLike(spark, replaced, table, tagCol)),
+      Snapshots.withInternalRid(Snapshots.restageLike(spark, replaced, table, tagCol)),
       remove = e => touchedRels.contains(e._1))
     finally caches.foreach(_.unpersist(blocking = false))
   }
@@ -507,7 +507,7 @@ object Mutations {
         if (touchedRels.isEmpty && replaced.isEmpty)
           return Snapshots.currentVersion(table)
         val staged =
-          Snapshots.withInternalRid(restageLike(spark, replaced, table, tagCol))
+          Snapshots.withInternalRid(Snapshots.restageLike(spark, replaced, table, tagCol))
         // a delete clause that empties EVERY file would commit a
         // zero-file snapshot — unreadable by the format's documented
         // limitation — and BRICK the live table; refuse BEFORE the
@@ -526,13 +526,6 @@ object Mutations {
       } finally matchedKeys.unpersist()
     } finally srcKeys.unpersist()
   }
-
-  /** Restage preserving the table's skipping surface — moved to the
-    * kernel ([[Snapshots.restageLike]]) so [[Snapshots.compact]] shares
-    * it; kept here as the name the mutation ops use. */
-  private def restageLike(spark: SparkSession, df: DataFrame, table: String,
-                          tagCol: String): Seq[Snapshots.Entry] =
-    Snapshots.restageLike(spark, df, table, tagCol)
 
   /** Reserved manifest property: table-relative dir of the entry's
     * deletion-vector sidecar (kernel-owned — [[Snapshots.vacuum]]
@@ -662,7 +655,7 @@ object Mutations {
         // the files stay and the merged read is readably empty
         if (relSet.size == entries.size && survivors.isEmpty) None
         else Some(Snapshots.commitRewrite(table, v0,
-          restageLike(spark, survivors, table, tagCol),
+          Snapshots.restageLike(spark, survivors, table, tagCol),
           remove = e => relSet.contains(e._1)))
       } else None
     }
@@ -748,7 +741,7 @@ object Mutations {
     if (heavy.size == Snapshots.entriesAt(table, v0).size && materialized.isEmpty)
       return v0
     Snapshots.commitRewrite(table, v0,
-      restageLike(spark, materialized, table, tagCol),
+      Snapshots.restageLike(spark, materialized, table, tagCol),
       remove = e => heavy.contains(e._1))
   }
 
@@ -969,7 +962,7 @@ object Mutations {
       case (df, (c, e)) => df.withColumn(c, when(predicate, e).otherwise(col(c)))
     }
     Snapshots.commitRewrite(table, v0,
-      Snapshots.withInternalRid(restageLike(spark, rewritten, table, tagCol)),
+      Snapshots.withInternalRid(Snapshots.restageLike(spark, rewritten, table, tagCol)),
       remove = e => touchedRels.contains(e._1))
   }
 
@@ -992,7 +985,7 @@ object Mutations {
         fileFilter = e => dvRels.contains(e.rel))
       .withColumnRenamed(Snapshots.RowIdCol, Snapshots.RidCol)
     Snapshots.commitRewrite(table, v0,
-      Snapshots.withInternalRid(restageLike(spark, materialized, table, tagCol)),
+      Snapshots.withInternalRid(Snapshots.restageLike(spark, materialized, table, tagCol)),
       remove = e => dvRels.contains(e._1))
   }
 
