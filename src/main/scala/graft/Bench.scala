@@ -239,19 +239,24 @@ object Bench {
       (beans.map(_.getCollectionTime).sum, beans.map(_.getCollectionCount).sum)
     }
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "3").toInt.max(1)
-    val results = set.map { n =>
+    // one warm run then `repeats` timed ones (a failed warm run is the
+    // whole record): (warm, timed runs, gc ms, gc count over the timed runs)
+    def warmRepeats(n: String): (Double, Seq[Double], Long, Long) =
       graft.engine.Caching.scoped {
         val warm = run(n)
         val (g0, c0) = gcStats()
         val ts = if (warm < 0) Seq(warm) else Seq.fill(repeats)(run(n))
         val (g1, c1) = gcStats()
-        // progress to stderr so a killed/timed-out run still shows how
-        // far it got and what each query cost
-        System.err.println(
-          s"[bench] $n warm=${"%.2f".format(warm)}s " +
-            s"runs=[${ts.map("%.2f".format(_)).mkString(",")}] gc=${g1 - g0}ms")
-        (n, ts, g1 - g0, c1 - c0)
+        (warm, ts, g1 - g0, c1 - c0)
       }
+    def fmt(ts: Seq[Double]) = ts.map("%.2f".format(_)).mkString(",")
+    val results = set.map { n =>
+      val (warm, ts, gc, gcN) = warmRepeats(n)
+      // progress to stderr so a killed/timed-out run still shows how
+      // far it got and what each query cost
+      System.err.println(
+        s"[bench] $n warm=${"%.2f".format(warm)}s runs=[${fmt(ts)}] gc=${gc}ms")
+      (n, ts, gc, gcN)
     }
     val (ok, bad) = results.partition(_._2.forall(_ >= 0))
 
@@ -288,13 +293,9 @@ object Bench {
         .map(b => (k, median(ts) / b))
     }.sortBy(-_._2).take(16).map(_._1)
     val iso = flagged.map { n =>
-      val ts = graft.engine.Caching.scoped {
-        val warm = run(n)
-        if (warm < 0) Seq(warm) else Seq.fill(repeats)(run(n))
-      }
+      val ts = warmRepeats(n)._2
       System.err.println(
-        s"[bench] ISO $n runs=[${ts.map("%.2f".format(_)).mkString(",")}]" +
-          s" (band ${bands(shortId(n))}s exceeded in-suite)")
+        s"[bench] ISO $n runs=[${fmt(ts)}] (band ${bands(shortId(n))}s exceeded in-suite)")
       (n, ts)
     }.filter(_._2.forall(_ >= 0))
     val qs = (ok.map { case (k, ts, _, _) => "\"" + k + "\":" + median(ts) } ++

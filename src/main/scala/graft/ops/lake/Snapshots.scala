@@ -952,7 +952,12 @@ object Snapshots {
 
   /** Snapshot `v`'s entries grouped by PHYSICAL footer schema — one
     * group for an un-evolved table, one per distinct schema after
-    * column evolution (each the rels sharing it). Cached; see the
+    * column evolution (each the rels sharing it). The hidden [[RidCol]]
+    * does not split a group: a MERGE/UPDATE/compact rewrite adds it to
+    * its files, and the group scans the variant carrying it (footer
+    * schemas are all-nullable, see [[footerSchema]]), so the older files
+    * read it as NULL — what [[rowIdFrom]]'s
+    * `coalesce(__rid, base + row_index)` expects. Cached; see the
     * section comment above. */
   private[graft] def schemaGroups(spark: SparkSession, table: String, v: Long)
       : Seq[(org.apache.spark.sql.types.StructType, Set[String])] = {
@@ -984,13 +989,17 @@ object Snapshots {
       val toProbe = byDir.toSeq.sortBy(_._1)
         .collect { case (k, ges) if !local.contains(k) => (k, ges.head.rel) }
       footerReads.addAndGet(toProbe.size)
-      // probe uncached groups on a bounded driver pool — a freshly
-      // converted table is one group PER FILE, and a serial loop over
-      // 10⁵ footers is the first-read stall the cache then amortizes
-      // (spark.read is thread-safe; each probe is one footer read)
+      // probe uncached groups on the driver, one footer open each (no
+      // Spark job), on a bounded pool past a few — a freshly converted
+      // table is one group PER FILE, and a serial loop over 10⁵ footers
+      // is the first-read stall the cache then amortizes. The converter
+      // is built HERE from the session conf: pool threads have no
+      // active session (nanosAsLong and friends must still apply)
+      val converter = new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      def probe(rel: String) = footerSchema(s"$table/$rel", converter)
       if (toProbe.size <= 4)
-        toProbe.foreach { case (k, rel) =>
-          local(k) = spark.read.parquet(s"$table/$rel").schema }
+        toProbe.foreach { case (k, rel) => local(k) = probe(rel) }
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
           math.min(16, toProbe.size))
@@ -998,18 +1007,45 @@ object Snapshots {
           toProbe.map { case (k, rel) =>
             (k, pool.submit(new java.util.concurrent.Callable[
                 org.apache.spark.sql.types.StructType] {
-              def call() = spark.read.parquet(s"$table/$rel").schema
+              def call() = probe(rel)
             }))
           }.foreach { case (k, fut) => local(k) = fut.get() }
         } finally pool.shutdown()
       }
       local.foreach { case (k, sch) => groupSchemaCache.put((table, k), sch) }
+      def withoutRid(s: org.apache.spark.sql.types.StructType) =
+        org.apache.spark.sql.types.StructType(s.fields.filterNot(_.name == RidCol))
       byDir.toSeq.sortBy(_._1)
         .map { case (k, ges) => (local(k), ges.map(_.rel).toSet) }
-        .groupBy(_._1).toSeq
-        .map { case (sch, parts) => (sch, parts.flatMap(_._2).toSet) }
+        .groupBy { case (sch, _) => withoutRid(sch) }.toSeq
+        .map { case (base, parts) =>
+          (parts.map(_._1).find(_.fieldNames.contains(RidCol)).getOrElse(base),
+            parts.flatMap(_._2).toSet) }
         .sortBy(_._2.min)
     })
+  }
+
+  /** The Spark schema of one parquet file, read from its footer on the
+    * driver — what `spark.read.parquet(path).schema` infers (Spark's own
+    * footer reading and conversion, all fields nullable), without the
+    * schema-inference Spark job. */
+  private[graft] def footerSchema(path: String,
+      converter: org.apache.spark.sql.execution.datasources.parquet
+        .ParquetToSparkSchemaConverter): org.apache.spark.sql.types.StructType =
+    withFooter(path) { (p, reader) =>
+      org.apache.spark.sql.GraftSqlBridge.asNullable(
+        org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+          .readSchemaFromFooter(
+            new org.apache.parquet.hadoop.Footer(p, reader.getFooter), converter))
+    }
+
+  private def withFooter[T](path: String)(
+      f: (org.apache.hadoop.fs.Path, org.apache.parquet.hadoop.ParquetFileReader) => T): T = {
+    val p = new org.apache.hadoop.fs.Path(new File(path).getAbsolutePath)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        p, new org.apache.hadoop.conf.Configuration()))
+    try f(p, reader) finally reader.close()
   }
 
   /** Scan exactly `selected` through manifest-backed pruned FileIndex
@@ -1779,20 +1815,13 @@ object Snapshots {
   private def footerInfoUncached(path: String,
       conf: org.apache.spark.sql.internal.SQLConf)
       : Option[(Long, Option[org.apache.spark.sql.types.StructType])] =
-    try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(new File(path).getAbsolutePath),
-        new org.apache.hadoop.conf.Configuration())
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        val rows = reader.getRecordCount
-        val schema =
-          try Some(new org.apache.spark.sql.execution.datasources.parquet
-              .ParquetToSparkSchemaConverter(conf)
-            .convert(reader.getFooter.getFileMetaData.getSchema))
-          catch { case scala.util.control.NonFatal(_) => None }
-        Some((rows, schema))
-      } finally reader.close()
+    try withFooter(path) { (_, reader) =>
+      val schema =
+        try Some(new org.apache.spark.sql.execution.datasources.parquet
+            .ParquetToSparkSchemaConverter(conf)
+          .convert(reader.getFooter.getFileMetaData.getSchema))
+        catch { case scala.util.control.NonFatal(_) => None }
+      Some((reader.getRecordCount, schema))
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Enrich added entries with [[RowsProp]] (entries already carrying
@@ -1870,25 +1899,6 @@ object Snapshots {
       Seq("__fid"), "left_semi")
   }
 
-  /** Read exactly `es` with their deletion vectors applied — the
-    * merge-on-read scan core: files without a vector stream through;
-    * files with one anti-join their sidecar's (file id, position) pairs
-    * (vector side is sidecar-sized, AQE broadcasts, the data side never
-    * shuffles). `mergeSchema` NULL-fills evolved schemas. `es` must be
-    * non-empty.
-    *
-    * `pruned = Some((version, tagColHint))` serves BOTH data scans (the
-    * anti-joined vectored files and the plain remainder) through
-    * [[groupedRead]]'s manifest-backed FileIndex assembly instead of
-    * bare `spark.read.parquet`, so predicates a query above pushes down
-    * — they travel through the logical projection and the left side of
-    * the anti-join — still prune manifest entries before any file
-    * opens. Without it (r9), one small deleteWhere cost every
-    * subsequent SQL SELECT its 96–99% file skipping until REORG — the
-    * one plan you would not want at 100×. Schema safety is
-    * groupedRead's: a slice it can't prove falls back to the plain
-    * read. `None` is for cross-version entry sets (the change feed),
-    * whose entries a single version's groups don't cover. */
   /** Row-id column from PRECOMPUTED (file-id, row-index) columns:
     * `coalesce(materialized __rid, entry base + row index)`, NULL when
     * the entry has no base. The base lookup is a broadcast join
@@ -1924,16 +1934,36 @@ object Snapshots {
     rowIdFrom(spark, withPos, es, "__ridf", "__ridp").drop("__ridf", "__ridp")
   }
 
+  /** Read exactly `es` with their deletion vectors applied — the
+    * merge-on-read scan core: files without a vector stream through;
+    * files with one anti-join their sidecar's (file id, position) pairs
+    * (vector side is sidecar-sized, AQE broadcasts, the data side never
+    * shuffles). `mergeSchema` NULL-fills evolved schemas. `es` must be
+    * non-empty.
+    *
+    * `pruned = Some((version, tagColHint))` serves BOTH data scans (the
+    * anti-joined vectored files and the plain remainder) through
+    * [[groupedRead]]'s manifest-backed FileIndex assembly instead of
+    * bare `spark.read.parquet`, so predicates a query above pushes down
+    * — they travel through the logical projection and the left side of
+    * the anti-join — still prune manifest entries before any file
+    * opens. Without it (r9), one small deleteWhere cost every
+    * subsequent SQL SELECT its 96–99% file skipping until REORG — the
+    * one plan you would not want at 100×. Schema safety is
+    * groupedRead's: a slice it can't prove falls back to the plain
+    * read. `None` is for cross-version entry sets (the change feed),
+    * whose entries a single version's groups don't cover. `rowIds`
+    * appends the stable [[RowIdCol]]. */
   private[lake] def readEntriesMerged(spark: SparkSession, table: String,
       es: Seq[Entry], mergeSchema: Boolean = false,
       pruned: Option[(Long, String)] = None,
       rowIds: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.col
-    require(!rowIds || pruned.isEmpty,
-      "readEntriesMerged: rowIds needs plain scans (grouped unions cannot " +
-        "resolve _metadata)")
-    // with rowIds the id column attaches PER SCAN (it needs _metadata);
-    // the hidden materialized column is dropped after folding into the id
+    // with rowIds the id column attaches PER SCAN (it needs _metadata,
+    // which only resolves on ONE relation: such reads never take the
+    // grouped union, a multi-group slice falls back to the plain
+    // mergeSchema read); the hidden materialized column is dropped
+    // after folding into the id
     def finish(df: DataFrame, fs: Seq[Entry]): DataFrame =
       if (rowIds) attachRowId(spark, df, fs).drop(RidCol) else df.drop(RidCol)
     def plain(fs: Seq[Entry]): DataFrame =
@@ -1941,7 +1971,7 @@ object Snapshots {
         .parquet(fs.map(e => s"$table/${e.rel}"): _*)
     def readFiles(fs: Seq[Entry]): DataFrame = pruned match {
       case Some((v, tagCol)) =>
-        groupedRead(spark, table, v, fs, tagCol, allowUnion = mergeSchema)
+        groupedRead(spark, table, v, fs, tagCol, allowUnion = mergeSchema && !rowIds)
           .getOrElse(plain(fs))
       case None => plain(fs)
     }
@@ -2019,11 +2049,11 @@ object Snapshots {
   /** [[readMerged]] exposing the stable [[RowIdCol]] — the REWRITE-path
     * read: a copy-on-write rewrite reads its survivors through this,
     * renames the id to the hidden [[RidCol]] and stages it, so every
-    * surviving row KEEPS its identity across the rewrite. Plain
-    * mergeSchema scans only (the id needs `_metadata`, which grouped
-    * pruned unions cannot resolve) — rewrite inputs are the touched
-    * slice, already file-filtered to O(affected files). */
-  private[lake] def readMergedWithIds(spark: SparkSession, table: String,
+    * surviving row KEEPS its identity across the rewrite. A slice of
+    * one schema group reads through the single manifest-pruned scan;
+    * one spanning several groups takes the plain mergeSchema read (the
+    * id needs `_metadata`, which a grouped union cannot resolve). */
+  private[graft] def readMergedWithIds(spark: SparkSession, table: String,
       version: Long = -1L,
       fileFilter: Entry => Boolean = _ => true): DataFrame = {
     import org.apache.spark.sql.functions.lit
@@ -2034,7 +2064,7 @@ object Snapshots {
         .withColumn(RowIdCol, lit(null).cast("long"))
     else
       applyLogical(readEntriesMerged(spark, table, es, mergeSchema = true,
-        rowIds = true), table, v)
+        pruned = Some((v, "")), rowIds = true), table, v)
   }
 
   /** Reserved prop-key PREFIX naming a file's bloom-sketch sidecar per

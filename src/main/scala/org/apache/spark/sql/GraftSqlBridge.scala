@@ -2,7 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** The three `private[sql]` doorways graft needs:
+/** The `private[sql]` doorways graft needs:
   *   - constructing a DataFrame from a custom LogicalPlan
   *     (`classic.Dataset.ofRows` is package-private at the Scala level in
   *     Spark 4) — standard practice for Spark plan extensions;
@@ -14,7 +14,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *   - eagerly unloading state-store provider instances
   *     (`StateStore.unloadAll`), so a multi-query process (the bench
   *     suite) releases RocksDB NATIVE memory when a streaming drain
-  *     finishes instead of when the 60 s maintenance sweep notices.
+  *     finishes instead of when the 60 s maintenance sweep notices;
+  *   - `StructType.asNullable` (`private[spark]`), so a schema read from
+  *     a parquet footer on the driver equals the one a file scan infers.
   * Nothing else from the internal API is touched here. */
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -30,6 +32,11 @@ object GraftSqlBridge {
     * parsed SQL strings. */
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** `schema` with every field (nested ones too) nullable — what a file
+    * source's inferred data schema always is. */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
 
   def unloadStateStores(): Unit =
     execution.streaming.state.StateStore.unloadAll()

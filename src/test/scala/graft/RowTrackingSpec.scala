@@ -316,4 +316,85 @@ class RowTrackingSpec extends AnyFunSuite with SparkFixture {
     assert(e2.getMessage.contains("__rid"), e2.getMessage)
     assert(Snapshots.currentVersion(table) == 0L, "nothing staged")
   }
+
+  // ---- pruned reads of rewritten tables ------------------------------
+
+  /** The file indexes behind every scan relation of `d`'s analyzed plan. */
+  private def scanIndexes(d: org.apache.spark.sql.DataFrame) =
+    d.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.relation
+    }.collect {
+      case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation => h.location
+    }
+
+  private def liveFiles(table: String): Seq[String] =
+    Snapshots.entriesAll(table).map(e => s"$table/${e.rel}")
+
+  private def sortedRows(d: org.apache.spark.sql.DataFrame): Seq[String] =
+    d.select(d.columns.sorted.map(col).toSeq: _*).collect().map(_.toString).toSeq.sorted
+
+  test("a MERGEd table reads through one manifest-pruned scan") {
+    val table = tmp("rid-one-scan")
+    Snapshots.commitAll(table, Snapshots.stageWithStats(
+      df((1L, "a", 1.0), (2L, "a", 2.0), (10L, "b", 10.0), (11L, "b", 11.0)),
+      table, "day", "id"))
+    Mutations.mergeInto(spark, table, df((10L, "b", 999.0), (20L, "c", 20.0)),
+      "id", "day")                                          // rewrite b + insert c
+    assert(spark.read.option("mergeSchema", "true").parquet(liveFiles(table): _*)
+      .columns.contains(Snapshots.RidCol), "the rewrite materializes ids")
+    // planning the read probes the new footers on the driver and lists
+    // nothing: no listing, inference or footer-probe job
+    val (read, jobs) = countJobs(Snapshots.read(spark, table))
+    assert(jobs == 0, s"planning the read launched $jobs jobs")
+    val groups = Snapshots.schemaGroups(spark, table, Snapshots.currentVersion(table))
+    assert(groups.size == 1, s"the hidden id column split the group: ${groups.map(_._1)}")
+    assert(groups.head._1.find(_.name == Snapshots.RidCol).exists(_.nullable),
+      "files without the id column must read it as NULL")
+    val idx = scanIndexes(read)
+    assert(idx.size == 1 && idx.head.isInstanceOf[org.apache.spark.sql.GraftFileIndex],
+      s"want one GraftFileIndex scan, got ${idx.map(_.getClass.getSimpleName)}")
+    assert(!read.columns.contains(Snapshots.RidCol))
+    assert(sortedRows(read) ==
+      sortedRows(spark.read.parquet(liveFiles(table): _*).drop(Snapshots.RidCol)))
+  }
+
+  test("a real added column still splits groups and keeps the plain read") {
+    import spark.implicits._
+    val table = tmp("rid-evolved")
+    Snapshots.commit(table, Snapshots.stage(
+      df((1L, "a", 1.0), (2L, "b", 2.0)), table, "day"))
+    Snapshots.commit(table, Snapshots.stage(
+      Seq((3L, "c", 3.0, 30L), (4L, "d", 4.0, 40L)).toDF("id", "day", "v", "w"), table, "day"))
+    Mutations.mergeInto(spark, table,
+      Seq((3L, "c", 33.0, 31L)).toDF("id", "day", "v", "w"), "id", "day")
+    val groups = Snapshots.schemaGroups(spark, table, Snapshots.currentVersion(table))
+    // two groups: the added column splits, the rewrite's id column does not
+    assert(groups.size == 2 &&
+      groups.map(_._1.fieldNames.filterNot(_ == Snapshots.RidCol).toSeq).toSet ==
+        Set(Seq("id", "day", "v"), Seq("id", "day", "v", "w")), s"${groups.map(_._1)}")
+    val read = Snapshots.read(spark, table)
+    assert(!scanIndexes(read).exists(_.isInstanceOf[org.apache.spark.sql.GraftFileIndex]),
+      "a divergent slice keeps the plain-read fallback")
+    assert(sortedRows(read) ==
+      sortedRows(spark.read.parquet(liveFiles(table): _*).drop(Snapshots.RidCol)))
+  }
+
+  test("row-id reads of a MERGEd table take the pruned scan and keep every id") {
+    val table = tmp("rid-pruned-ids")
+    Snapshots.commitAll(table, Snapshots.stageWithStats(
+      df((1L, "a", 1.0), (2L, "a", 2.0), (10L, "b", 10.0), (11L, "b", 11.0)),
+      table, "day", "id"))
+    val base = idsByKey(table)
+    Mutations.mergeInto(spark, table, df((10L, "b", 999.0), (20L, "c", 20.0)),
+      "id", "day")
+    val withIds = Snapshots.readMergedWithIds(spark, table)
+    val idx = scanIndexes(withIds)
+    assert(idx.size == 1 && idx.head.isInstanceOf[org.apache.spark.sql.GraftFileIndex],
+      s"want one GraftFileIndex scan, got ${idx.map(_.getClass.getSimpleName)}")
+    val got = withIds.select("id", Snapshots.RowIdCol).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got - 20L == base,
+      s"survivors keep their ids and the matched row inherits its id: $base -> $got")
+    assert(got == idsByKey(table), "the feed's plain-scan ids agree")
+  }
 }

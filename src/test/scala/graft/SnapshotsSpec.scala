@@ -1929,6 +1929,20 @@ class SnapshotsSpec extends AnyFunSuite with SparkFixture {
         "(r10 advisor find: per-version re-probes of every group)")
   }
 
+  test("driver-side footer schemas equal the inferred scan schema") {
+    // the sf0.01 fixture the benchmark ships: TIMESTAMP(NANOS) events
+    // (read as longs), decimals, arrays, timestamps
+    val files = new java.io.File("perfbench/fixtures/sf0.01").listFiles()
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
+    assert(files.size == 10)
+    val converter = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    files.foreach { f =>
+      assert(Snapshots.footerSchema(f.getPath, converter) ==
+        spark.read.parquet(f.getPath).schema, f.getName)
+    }
+  }
+
   test("changesAttributed: props-only commits contribute no plan branches") {
     val table = tmp("snap-cdf-noop")
     Snapshots.commit(table, Snapshots.stage(
